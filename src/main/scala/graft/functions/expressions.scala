@@ -96,6 +96,9 @@ object expressions {
       es => KmvTokensAgg(es(0), es(1), es(2)), "built-in")
     reg.createOrReplaceTempFunction("graft_token_feats",
       es => TokenFeats(es(0)), "built-in")
+    reg.createOrReplaceTempFunction("graft_code_sum",
+      es => CodeSumAgg(es(0), if (es.length > 1) es(1) else Literal(40)),
+      "built-in")
     reg.createOrReplaceTempFunction("graft_hll_tokens",
       es => HllTokensAgg(es(0), es(1)), "built-in")
     reg.createOrReplaceTempFunction("graft_unigram_counts",
@@ -111,6 +114,10 @@ object expressions {
     reg.createOrReplaceTempFunction("graft_bigram_nll",
       es => BigramNllScore(es(0), BigramNllSlots.get(litInt(es(1)))),
       "built-in")
+    reg.createOrReplaceTempFunction("graft_unigram_diversity",
+      es => UnigramDiversityKernel(es(0), es(1), es(2)), "built-in")
+    reg.createOrReplaceTempFunction("graft_top_codes",
+      es => TopCodes(es(0), es(1), es(2)), "built-in")
     reg.createOrReplaceTempFunction("graft_nb_score",
       es => NbScoreKernel(es(0), es(1), es(2)), "built-in")
     reg.createOrReplaceTempFunction("graft_remap_tokens",
@@ -700,6 +707,222 @@ object expressions {
       copy(tokens = c(0), saltE = c(1), kE = c(2))
   }
 
+  /** The `code → count` buffer of [[CodeSumAgg]], in one of two forms.
+    * While a task folds rows it is a primitive open-addressing table
+    * (codes are non-negative — every packed layout keeps them below
+    * 2^26 — so -1 marks an empty slot; linear probing over a
+    * Fibonacci-hashed index at load ≤ 1/2, code and count side by side in
+    * one long array). It serializes as a code-ascending run, sorted on
+    * the map side; a deserialized buffer stays a run, and merging two
+    * runs is one sequential pass, so the final merge does no hashing. */
+  final class CodeCounts {
+    private var cap = 0
+    private var table: Array[Long] = _ // [code, count] pairs; null in run form
+    private var runCodes: Array[Long] = _
+    private var runCounts: Array[Long] = _
+    var size = 0
+    allocate(32)
+
+    private def allocate(n: Int): Unit = {
+      cap = Integer.highestOneBit(math.max(n, 8) * 2 - 1) << 1
+      table = new Array[Long](2 * cap)
+      java.util.Arrays.fill(table, -1L)
+    }
+
+    private def slot(code: Long): Int =
+      ((code * 0x9e3779b97f4a7c15L) >>> (64 - Integer.numberOfTrailingZeros(cap))).toInt
+
+    def add(code: Long, n: Long): Unit = {
+      if (table == null) toTable()
+      val m = cap - 1
+      var i = slot(code)
+      while (table(2 * i) != code && table(2 * i) != -1L) i = (i + 1) & m
+      if (table(2 * i) == code) table(2 * i + 1) += n
+      else {
+        table(2 * i) = code; table(2 * i + 1) = n; size += 1
+        if (2 * size > cap) grow()
+      }
+    }
+
+    private def grow(): Unit = {
+      val old = table
+      allocate(2 * size)
+      size = 0
+      var i = 0
+      while (i < old.length) { if (old(i) != -1L) add(old(i), old(i + 1)); i += 2 }
+    }
+
+    private def toTable(): Unit = {
+      val (cs, ns) = (runCodes, runCounts)
+      runCodes = null; runCounts = null
+      allocate(cs.length)
+      size = 0
+      var i = 0
+      while (i < cs.length) { add(cs(i), ns(i)); i += 1 }
+    }
+
+    private def toRun(): Unit = if (table != null) {
+      val codes = new Array[Long](size)
+      var i = 0; var j = 0
+      while (i < table.length) { if (table(i) != -1L) { codes(j) = table(i); j += 1 }; i += 2 }
+      java.util.Arrays.sort(codes)
+      val counts = new Array[Long](size)
+      val m = cap - 1
+      j = 0
+      while (j < size) {
+        var k = slot(codes(j))
+        while (table(2 * k) != codes(j)) k = (k + 1) & m
+        counts(j) = table(2 * k + 1)
+        j += 1
+      }
+      table = null
+      runCodes = codes; runCounts = counts
+    }
+
+    /** Adds every entry of `o` into this buffer: one merge pass over the
+      * two code-ascending runs. */
+    def addAll(o: CodeCounts): Unit = {
+      toRun(); o.toRun()
+      if (size == 0) { // adopt: runs are never written after they are built
+        runCodes = o.runCodes; runCounts = o.runCounts; size = o.size
+        return
+      }
+      val (a, an, b, bn) = (runCodes, runCounts, o.runCodes, o.runCounts)
+      val codes = new Array[Long](a.length + b.length)
+      val counts = new Array[Long](codes.length)
+      var i = 0; var j = 0; var k = 0
+      while (i < a.length || j < b.length) {
+        if (j == b.length || (i < a.length && a(i) < b(j))) {
+          codes(k) = a(i); counts(k) = an(i); i += 1
+        } else if (i == a.length || b(j) < a(i)) {
+          codes(k) = b(j); counts(k) = bn(j); j += 1
+        } else {
+          codes(k) = a(i); counts(k) = an(i) + bn(j); i += 1; j += 1
+        }
+        k += 1
+      }
+      runCodes = java.util.Arrays.copyOf(codes, k)
+      runCounts = java.util.Arrays.copyOf(counts, k)
+      size = k
+    }
+
+    /** (codes ascending, their counts). */
+    def sorted: (Array[Long], Array[Long]) = { toRun(); (runCodes, runCounts) }
+
+    def serialize: Array[Byte] = {
+      toRun()
+      val bb = java.nio.ByteBuffer.allocate(4 + 16 * size)
+      bb.putInt(size)
+      bb.asLongBuffer().put(runCodes).put(runCounts)
+      bb.array()
+    }
+  }
+
+  object CodeCounts {
+    def deserialize(bytes: Array[Byte]): CodeCounts = {
+      val bb = java.nio.ByteBuffer.wrap(bytes)
+      val n = bb.getInt()
+      val b = new CodeCounts
+      b.table = null
+      b.runCodes = new Array[Long](n)
+      b.runCounts = new Array[Long](n)
+      bb.asLongBuffer().get(b.runCodes).get(b.runCounts)
+      b.size = n
+      b
+    }
+  }
+
+  /** graft_code_sum(packed ARRAY<BIGINT>, countBits INT = 40)
+    * → STRUCT<code: ARRAY<BIGINT>, count: ARRAY<BIGINT>>
+    *
+    * Sums the per-row packed `(code << countBits) | count` histograms of
+    * the counting kernels ([[UnigramCounts]] / [[BigramCounts]]: 40 bits,
+    * [[SkipGramCounts]]: 32) into one `code → count` table, returned as
+    * code-ascending primitive arrays. The buffer is a [[CodeCounts]] at
+    * every stage: each task folds its rows' arrays straight into it and
+    * ships one partial per group, so the exchange carries at most
+    * groups × tasks records and nothing is exploded — the same result as
+    * `explode → groupBy(…, code) → sum(count)`, for which it stands in.
+    * Null rows and null elements are skipped; a group with no elements
+    * yields two empty arrays. */
+  case class CodeSumAgg(packed: Expression, bitsE: Expression,
+      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+      extends org.apache.spark.sql.catalyst.expressions.aggregate
+        .TypedImperativeAggregate[CodeCounts] {
+    private lazy val bits = {
+      val v = litInt(bitsE)
+      require(v >= 1 && v <= 62, s"code_sum count bits must be 1..62, got $v")
+      v
+    }
+    private lazy val mask = (1L << bits) - 1
+    override def children: Seq[Expression] = Seq(packed, bitsE)
+    override def dataType: DataType = CodeSumAgg.ResultType
+    override def nullable: Boolean = false
+    override def createAggregationBuffer(): CodeCounts = new CodeCounts()
+    override def update(b: CodeCounts, row: InternalRow): CodeCounts = {
+      val aAny = packed.eval(row)
+      if (aAny != null) {
+        val arr = aAny.asInstanceOf[ArrayData]
+        val n = arr.numElements()
+        var i = 0
+        while (i < n) {
+          if (!arr.isNullAt(i)) {
+            val v = arr.getLong(i)
+            b.add(v >>> bits, v & mask)
+          }
+          i += 1
+        }
+      }
+      b
+    }
+    override def merge(b: CodeCounts, o: CodeCounts): CodeCounts = {
+      b.addAll(o)
+      b
+    }
+    override def eval(b: CodeCounts): Any = {
+      val (codes, counts) = b.sorted
+      InternalRow(UnsafeArrayData.fromPrimitiveArray(codes),
+        UnsafeArrayData.fromPrimitiveArray(counts))
+    }
+    override def serialize(b: CodeCounts): Array[Byte] = b.serialize
+    override def deserialize(bytes: Array[Byte]): CodeCounts =
+      CodeCounts.deserialize(bytes)
+    override def withNewMutableAggBufferOffset(o: Int): CodeSumAgg =
+      copy(mutableAggBufferOffset = o)
+    override def withNewInputAggBufferOffset(o: Int): CodeSumAgg =
+      copy(inputAggBufferOffset = o)
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
+      copy(packed = c(0), bitsE = c(1))
+  }
+
+  object CodeSumAgg {
+    val ResultType: StructType = StructType(Seq(
+      StructField("code", ArrayType(LongType, containsNull = false), nullable = false),
+      StructField("count", ArrayType(LongType, containsNull = false), nullable = false)))
+  }
+
+  /** `graft_code_sum(packed, countBits)` as a Column. */
+  def codeSum(packed: org.apache.spark.sql.Column,
+              countBits: Int = 40): org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.call_function("graft_code_sum", packed,
+      org.apache.spark.sql.functions.lit(countBits))
+
+  /** Spark-`CAST(round(x) AS BIGINT)`-exact quantizer: `round` on a double
+    * is `BigDecimal.valueOf(x).setScale(0, HALF_UP)`. With `StrictMath.log`
+    * (Spark's `ln`) it evaluates the SQL micro-nat terms
+    * `CAST(round(ln(·) * 1000000) AS BIGINT)` bit for bit off the plan. */
+  def microNat(x: Double): Long = {
+    // Double.toString's shortest decimal never crosses a k + 0.5 boundary
+    // the double itself does not cross (k + 0.5 is a double below 2^52,
+    // and the decimal must round back to x), so HALF_UP of the exact
+    // binary value is the same integer — without the string round trip
+    require(!x.isNaN && !x.isInfinite, s"micro-nat of $x")
+    val a = math.abs(x)
+    val f = math.floor(a)
+    val r = if (a - f >= 0.5) f + 1 else f
+    (if (x < 0) -r else r).toLong
+  }
+
   // ------------------------------------------------------------------
 
   /** graft_unigram_counts(tokens ARRAY<INT>) → ARRAY<BIGINT>
@@ -761,8 +984,8 @@ object expressions {
     * kernel does not fit per row) replaces the corpus-wide explode +
     * `(doc, gram)` hash-aggregate the n-gram LM scorers
     * ([[graft.ops.LanguageModel.scoreBigramNll]] / `scoreBigramKn`) paid
-    * before — downstream explodes see only the DISTINCT bigrams of each
-    * doc (~2.4× fewer rows on the synthetic corpus) and no corpus-sized
+    * before — [[CodeSumAgg]] folds only the DISTINCT bigrams of each
+    * doc (~2.4× fewer entries on the synthetic corpus) and no corpus-sized
     * aggregation exchange runs at all. Unpack with [[gramOf]] /
     * [[cntOf]]; counts are bounded by the analysis cap (8192 ≪ 2^40) so
     * the packing is lossless, and gram < 2^24 keeps `gram << 40`
@@ -813,6 +1036,45 @@ object expressions {
 
   // ------------------------------------------------------------------
 
+  /** The bigram → `nll_micro` model of [[BigramNllScore]], sized by the
+    * bigrams present: built in one pass from the code-ascending grams,
+    * it holds each bigram's right token (12 bits, as a short) and value
+    * in gram order plus the start of every left token's run, so a lookup
+    * is a binary search inside one left token's run of right tokens. */
+  final class BigramNllTable(grams: Array[Long], nll: Array[Int])
+      extends Serializable {
+    require(grams.length == nll.length)
+    private val starts = new Array[Int](4097)
+    private val right = new Array[Short](grams.length)
+    locally {
+      var i = 0
+      while (i < grams.length) {
+        require(grams(i) >= 0 && grams(i) < (1 << 24) && (i == 0 || grams(i) > grams(i - 1)),
+          "bigram model grams must ascend within the 24-bit domain")
+        starts((grams(i) >>> 12).toInt + 1) += 1
+        right(i) = (grams(i) & 4095).toShort
+        i += 1
+      }
+      var t = 0
+      while (t < 4096) { starts(t + 1) += starts(t); t += 1 }
+    }
+
+    /** `nll_micro` of `gram`, or Int.MinValue when the model lacks it. */
+    def apply(gram: Int): Int = {
+      val t2 = (gram & 4095).toShort
+      var lo = starts(gram >>> 12)
+      var hi = starts((gram >>> 12) + 1) - 1
+      while (lo <= hi) {
+        val mid = (lo + hi) >>> 1
+        val v = right(mid)
+        if (v < t2) lo = mid + 1
+        else if (v > t2) hi = mid - 1
+        else return nll(mid)
+      }
+      Int.MinValue
+    }
+  }
+
   /** Driver-side registry handing per-query bigram-NLL model broadcasts
     * to [[BigramNllScore]] (the registered-function builder can only
     * receive child EXPRESSIONS, so the broadcast travels by slot id: the
@@ -826,16 +1088,16 @@ object expressions {
   object BigramNllSlots {
     private val slots =
       new java.util.concurrent.ConcurrentHashMap[Int,
-        org.apache.spark.broadcast.Broadcast[Array[Int]]]()
+        org.apache.spark.broadcast.Broadcast[BigramNllTable]]()
     private val nextId = new java.util.concurrent.atomic.AtomicInteger(0)
     private val Keep = 8
-    def put(bc: org.apache.spark.broadcast.Broadcast[Array[Int]]): Int = {
+    def put(bc: org.apache.spark.broadcast.Broadcast[BigramNllTable]): Int = {
       val id = nextId.incrementAndGet()
       slots.put(id, bc)
       slots.keySet.removeIf(k => k <= id - Keep)
       id
     }
-    def get(id: Int): org.apache.spark.broadcast.Broadcast[Array[Int]] = {
+    def get(id: Int): org.apache.spark.broadcast.Broadcast[BigramNllTable] = {
       val bc = slots.get(id)
       require(bc != null, s"bigram-nll model slot $id expired")
       bc
@@ -851,21 +1113,20 @@ object expressions {
     * relational per-doc-counts ⋈ broadcast-model form it replaces
     * ([[graft.ops.LanguageModel.scoreBigramKn]] / `scoreBigramNll`),
     * with zero explode, zero join and zero aggregation exchange. The
-    * model is the DENSE alphabet-bounded table `nll[gram]` over the
-    * 16.7M-slot 24-bit gram domain (67 MB of ints — bounded by the token
-    * alphabet at ANY corpus size), distributed as a real Spark broadcast
-    * via [[BigramNllSlots]]. PRECONDITION (self-scoring contract): every
-    * scored bigram must exist in the model — absent slots hold
-    * Int.MinValue and trip the require below. Returns null for rows with
-    * fewer than 2 tokens (no bigrams — such docs are absent from the
-    * relational form's output too). */
+    * model is a [[BigramNllTable]] holding only the corpus's distinct
+    * bigrams, distributed as a real Spark broadcast via
+    * [[BigramNllSlots]]. PRECONDITION (self-scoring contract): every
+    * scored bigram must exist in the model — an absent one trips the
+    * require below. Returns null for rows with fewer than 2 tokens (no
+    * bigrams — such docs are absent from the relational form's output
+    * too). */
   case class BigramNllScore(tokens: Expression,
-      bc: org.apache.spark.broadcast.Broadcast[Array[Int]])
+      bc: org.apache.spark.broadcast.Broadcast[BigramNllTable])
       extends Expression with CodegenFallback {
     override def children: Seq[Expression] = Seq(tokens)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def nullable: Boolean = true
-    @transient private lazy val nll: Array[Int] = bc.value
+    @transient private lazy val nll: BigramNllTable = bc.value
     override def eval(input: InternalRow): Any = {
       val tAny = tokens.eval(input)
       if (tAny == null) return null
@@ -891,6 +1152,137 @@ object expressions {
     }
     override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
       copy(tokens = c(0))
+  }
+
+  /** graft_unigram_diversity(tokens ARRAY<INT>, cg ARRAY<BIGINT>, nn BIGINT)
+    * → ARRAY<BIGINT> `[n, Σ c·h_micro, Σ c·kl_micro]`
+    *
+    * Per-doc unigram entropy and KL-to-corpus terms of
+    * [[graft.ops.LanguageModel.unigramDiversity]] in one pass over the
+    * doc's own 4096-slot histogram: for each distinct token with in-doc
+    * count `c` (doc length `n`, corpus count `cg[gram]`, corpus total
+    * `nn`), `h_micro = CAST(round(ln(n / c) * 1000000) AS BIGINT)` and
+    * `kl_micro = CAST(round(ln((c·nn) / (n·cg)) * 1000000) AS BIGINT)`,
+    * evaluated exactly as that SQL evaluates them ([[microNat]] over
+    * `StrictMath.log` of the same IEEE double expressions), then folded
+    * as exact int64 sums. `cg` is the LITERAL dense 4096-slot corpus
+    * histogram, decoded once per instance. Null for null or empty
+    * `tokens`. */
+  case class UnigramDiversityKernel(tokens: Expression, cgE: Expression,
+      nnE: Expression)
+      extends Expression with CodegenFallback {
+    override def children: Seq[Expression] = Seq(tokens, cgE, nnE)
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullable: Boolean = true
+    private lazy val cg: Array[Long] = {
+      require(cgE.foldable, "graft_unigram_diversity: cg must be a literal")
+      val v = cgE.eval(null).asInstanceOf[ArrayData].toLongArray()
+      require(v.length == 4096, s"cg must hold 4096 grams, got ${v.length}")
+      v
+    }
+    private lazy val nn: Double = {
+      require(nnE.foldable, "graft_unigram_diversity: nn must be a literal")
+      nnE.eval(null).asInstanceOf[Long].toDouble
+    }
+    override def eval(input: InternalRow): Any = {
+      val tAny = tokens.eval(input)
+      if (tAny == null) return null
+      val arr = tAny.asInstanceOf[ArrayData].toIntArray()
+      if (arr.isEmpty) return null
+      val hist = new Array[Int](4096)
+      var i = 0
+      while (i < arr.length) {
+        val g = arr(i) + 2048
+        require(g >= 0 && g < 4096,
+          s"token out of 12-bit domain [-2048, 2047]: ${arr(i)}")
+        hist(g) += 1
+        i += 1
+      }
+      val n = arr.length.toDouble
+      var sumH = 0L
+      var sumK = 0L
+      var g = 0
+      while (g < 4096) {
+        val c = hist(g)
+        if (c > 0) {
+          val cd = c.toDouble
+          sumH += c * microNat(StrictMath.log(n / cd) * 1000000)
+          sumK += c * microNat(StrictMath.log((cd * nn) / (n * cg(g).toDouble)) * 1000000)
+        }
+        g += 1
+      }
+      UnsafeArrayData.fromPrimitiveArray(Array(arr.length.toLong, sumH, sumK))
+    }
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
+      copy(tokens = c(0), cgE = c(1), nnE = c(2))
+  }
+
+  /** graft_top_codes(code ARRAY<BIGINT>, count ARRAY<BIGINT>, k INT)
+    * → ARRAY<STRUCT<code: BIGINT, c: BIGINT>>
+    *
+    * The `k` entries of a [[CodeSumAgg]] result with the largest counts,
+    * ties to the smaller code, in that order (count desc, code asc) —
+    * one bounded-heap pass over the table. */
+  case class TopCodes(codeE: Expression, countE: Expression, kE: Expression)
+      extends Expression with CodegenFallback {
+    private lazy val k = {
+      val v = litInt(kE)
+      require(v >= 0, s"top-codes k must be >= 0, got $v")
+      v
+    }
+    override def children: Seq[Expression] = Seq(codeE, countE, kE)
+    override def dataType: DataType = ArrayType(TopCodes.Entry, containsNull = false)
+    override def nullable: Boolean = codeE.nullable || countE.nullable
+    override def eval(input: InternalRow): Any = {
+      val cAny = codeE.eval(input)
+      val nAny = countE.eval(input)
+      if (cAny == null || nAny == null) return null
+      val codes = cAny.asInstanceOf[ArrayData].toLongArray()
+      val counts = nAny.asInstanceOf[ArrayData].toLongArray()
+      require(codes.length == counts.length, "code and count arrays must align")
+      // heap root = the weakest kept entry: smallest count, then largest code
+      def weaker(a: Int, b: Int): Boolean =
+        counts(a) < counts(b) || (counts(a) == counts(b) && codes(a) > codes(b))
+      val heap = new Array[Int](math.min(k, codes.length))
+      var size = 0
+      def siftDown(from: Int): Unit = {
+        var i = from
+        var done = false
+        while (!done) {
+          val l = 2 * i + 1; val r = l + 1
+          var m = i
+          if (l < size && weaker(heap(l), heap(m))) m = l
+          if (r < size && weaker(heap(r), heap(m))) m = r
+          if (m == i) done = true
+          else { val t = heap(m); heap(m) = heap(i); heap(i) = t; i = m }
+        }
+      }
+      var j = 0
+      while (j < codes.length) {
+        if (size < heap.length) {
+          var i = size; heap(i) = j; size += 1
+          while (i > 0 && weaker(heap(i), heap((i - 1) / 2))) {
+            val p = (i - 1) / 2
+            val t = heap(p); heap(p) = heap(i); heap(i) = t; i = p
+          }
+        } else if (size > 0 && weaker(heap(0), j)) {
+          heap(0) = j
+          siftDown(0)
+        }
+        j += 1
+      }
+      val out = heap.take(size).sortWith((a, b) => weaker(b, a))
+      new GenericArrayData(out.map(i =>
+        new GenericInternalRow(Array[Any](codes(i), counts(i))): Any))
+    }
+    override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
+      copy(codeE = c(0), countE = c(1), kE = c(2))
+  }
+
+  object TopCodes {
+    val Entry: StructType = StructType(Seq(
+      StructField("code", LongType, nullable = false),
+      StructField("c", LongType, nullable = false)))
   }
 
   // ------------------------------------------------------------------

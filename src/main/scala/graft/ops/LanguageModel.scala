@@ -32,6 +32,11 @@ import org.apache.spark.sql.functions._
   * count; for 10^12-token corpora pre-aggregate instances per
   * (gram, doc-bucket) or salt the join ([[graft.core.Partitioning]]). The
   * count tables are O(vocab²) ≪ corpus and never leave the cluster.
+  * The bigram scorers, [[unigramDiversity]] and [[sourceDrift]] skip the
+  * explode: each task folds the per-doc histograms into one primitive
+  * table ([[graft.functions.expressions.CodeSumAgg]]), the alphabet-bounded
+  * model reaches the driver as primitive arrays, and scoring is a narrow
+  * kernel projection.
   */
 object LanguageModel {
 
@@ -52,51 +57,66 @@ object LanguageModel {
     c12.join(broadcast(c1), Seq("t1"))
   }
 
-  /** Per-document add-one-smoothed bigram negative log-likelihood:
-    * `avg_nll = (1/n) Σ ln((c1 + V) / (c12 + 1))` in nats, with `V` the
-    * unigram vocabulary size and the model fit on `seqs` itself (the
-    * self-scoring form; to score against a reference corpus, fit
-    * [[bigramCounts]] there and join here). Low = predictable, fluent
-    * under the corpus model; high = outlier (the filter threshold axis).
-    * `n_bigrams` rides along so callers can re-weight. */
-  /** Per-doc distinct-bigram counts `(doc_id, gram, n_occ)` off the
-    * native [[graft.functions.expressions.BigramCounts]] kernel — the
-    * explode carries only each doc's DISTINCT bigrams (already counted),
-    * so no corpus-sized `(doc, gram)` hash-aggregate exchange ever runs
-    * (the [[graft.functions.expressions.UnigramCounts]] pattern). */
-  private def docBigramCounts(seqs: DataFrame): DataFrame = {
-    graft.functions.expressions.register(seqs.sparkSession)
-    val e = graft.functions.expressions
-    seqs.select(col("doc_id"),
-        explode(expr("graft_bigram_counts(tokens)")).as("gc"))
-      .select(col("doc_id"), e.gramOf(col("gc")).as("gram"),
-        e.cntOf(col("gc")).as("n_occ"))
+  /** The corpus-wide sums of the per-doc packed histograms in `packed`
+    * (one [[graft.functions.expressions.CodeSumAgg]] each, ONE job): per
+    * column, the code-ascending codes and their counts as primitive
+    * arrays — each task folds its docs into one table, so the exchange
+    * carries one partial per task and the driver receives one row. */
+  private def corpusCounts(seqs: DataFrame, packed: String*)
+      : Seq[(Array[Long], Array[Long])] = {
+    val spark = seqs.sparkSession
+    import spark.implicits._
+    graft.functions.expressions.register(spark)
+    val sums = packed.indices.map(i =>
+      graft.functions.expressions.codeSum(expr(packed(i))).as(s"__c$i"))
+    val arrays = seqs.agg(sums.head, sums.tail: _*)
+      .select(array(packed.indices.flatMap(i =>
+        Seq(col(s"__c$i.code"), col(s"__c$i.count"))): _*))
+      .as[Seq[Array[Long]]].head()
+    packed.indices.map(i => (arrays(2 * i), arrays(2 * i + 1)))
   }
 
-  /** Spark-`round(x)`-exact micro-nat quantizer (BigDecimal HALF_UP —
-    * the [[graft.ops.NaiveBayes]] driver-math convention, oracle-pinned). */
-  private def microNat(x: Double): Long =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue
+  /** Per source of `seqs`: its dense 4096-slot unigram histogram and its
+    * doc count (`count(*)`, null-token docs included), in source order —
+    * one `groupBy(source)` of [[graft.functions.expressions.CodeSumAgg]],
+    * so the exchange carries one partial per (task, source) and the
+    * driver receives one row of primitive arrays per source. */
+  private[ops] def sourceUnigrams(seqs: DataFrame): Array[(String, Array[Long], Long)] = {
+    val spark = seqs.sparkSession
+    import spark.implicits._
+    graft.functions.expressions.register(spark)
+    seqs.groupBy(col("source"))
+      .agg(graft.functions.expressions.codeSum(
+          expr("graft_unigram_counts(tokens)")).as("cs"),
+        count(lit(1)).as("docs"))
+      .select(col("source"), col("cs.code"), col("cs.count"), col("docs"))
+      .as[(String, Array[Long], Array[Long], Long)].collect()
+      .map { case (source, grams, counts, docs) =>
+        val hist = new Array[Long](4096)
+        for (i <- grams.indices) hist(grams(i).toInt) = counts(i)
+        (source, hist, docs)
+      }
+      .sortBy(r => Option(r._1))
+  }
 
-  /** The dense alphabet-bounded nll table + fused scoring pass shared by
-    * [[scoreBigramNll]] and [[scoreBigramKn]] (r6): `nllOf` maps each
-    * model row (gram, c12) to its micro-nat value; the 16.7M-slot int
-    * table broadcasts once and each document scores in ONE narrow kernel
-    * projection ([[graft.functions.expressions.BigramNllScore]]) — zero
-    * explode, zero join, zero aggregation exchange on the scoring side. */
-  private def scoreWithDense(seqs: DataFrame, model: Array[(Long, Long)],
-                             nllOf: (Long, Long) => Long,
-                             outCol: String): DataFrame = {
+  /** Scores every doc of `seqs` with ≥ 2 tokens against the per-gram
+    * `nll_micro` values `nll` of the code-ascending bigrams `grams`,
+    * shared by [[scoreBigramNll]] and [[scoreBigramKn]]: the model
+    * broadcasts as a [[graft.functions.expressions.BigramNllTable]] sized
+    * by the bigrams present, and each document scores in ONE narrow
+    * kernel projection ([[graft.functions.expressions.BigramNllScore]])
+    * — zero explode, zero join, zero aggregation exchange on the
+    * scoring side. */
+  private def scoreWithModel(seqs: DataFrame, grams: Array[Long],
+                             nll: Array[Long], outCol: String): DataFrame = {
     val e = graft.functions.expressions
-    val dense = Array.fill(4096 * 4096)(Int.MinValue)
-    for ((gram, c12) <- model) {
-      val v = nllOf(gram, c12)
+    val vals = nll.map { v =>
       require(v > Int.MinValue && v <= Int.MaxValue,
-        s"nll_micro $v out of the dense-table int range")
-      dense(gram.toInt) = v.toInt
+        s"nll_micro $v out of the model's int range")
+      v.toInt
     }
-    val bc = seqs.sparkSession.sparkContext.broadcast(dense)
+    val bc = seqs.sparkSession.sparkContext.broadcast(
+      new e.BigramNllTable(grams, vals))
     val slot = e.BigramNllSlots.put(bc)
     seqs.filter(size(col("tokens")) >= 2)
       .select(col("doc_id"),
@@ -107,35 +127,33 @@ object LanguageModel {
           (col("__r")(0) * lit(1000000L)).cast("double")).as(outCol))
   }
 
+  /** Per-document add-one-smoothed bigram negative log-likelihood:
+    * `avg_nll = (1/n) Σ ln((c1 + V) / (c12 + 1))` in nats, with `V` the
+    * unigram vocabulary size and the model fit on `seqs` itself (the
+    * self-scoring form; to score against a reference corpus, fit
+    * [[bigramCounts]] there and join here). Low = predictable, fluent
+    * under the corpus model; high = outlier (the filter threshold axis).
+    * `n_bigrams` rides along so callers can re-weight.
+    *
+    * Shape: the model is vocab²-bounded (≤16.7M distinct bigrams at ANY
+    * corpus size — the 12-bit token alphabet caps it). One job sums the
+    * per-doc bigram and unigram histograms into two code → count tables
+    * (the unigram codes give V); the per-gram add-one nll is computed
+    * driver-side exactly as the SQL
+    * `CAST(round(ln((c1 + V) / (c12 + 1)) * 1000000) AS BIGINT)`; scoring
+    * is the fused kernel pass — the corpus side runs zero shuffles and
+    * zero joins. */
   def scoreBigramNll(seqs: DataFrame): DataFrame = {
-    // r6 final shape (guide §1.2/§2.4): the model is vocab²-bounded
-    // (≤16.7M distinct bigrams at ANY corpus size — the 12-bit token
-    // alphabet caps it), so ONE counting job collects it (bigram counts
-    // + tagged unigram rows for the vocabulary size V in the same union
-    // pass), the per-gram add-one nll is computed driver-side
-    // (micro-nat HALF_UP — the oracle-pinned quantization), and scoring
-    // is the fused dense-table kernel pass: the corpus side runs zero
-    // shuffles and zero joins. Replaces the r6-intermediate
-    // checkpoint + broadcast-join form (2.4 s) and the r5 corpus-window
-    // form (3.4 s) — measured ~1.5 s at sf0.1, bitwise identical.
-    graft.functions.expressions.register(seqs.sparkSession)
-    val e = graft.functions.expressions
-    val rows = seqs.select(lit(0).as("k"),
-        explode(expr("graft_bigram_counts(tokens)")).as("gc"))
-      .unionByName(seqs.select(lit(1).as("k"),
-        explode(expr("graft_unigram_counts(tokens)")).as("gc")))
-      .select(col("k"), e.gramOf(col("gc")).as("gram"),
-        e.cntOf(col("gc")).as("c"))
-      .groupBy(col("k"), col("gram")).agg(sum(col("c")).as("c12"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    val v = rows.count(_._1 == 1).toLong
-    val model = rows.collect { case (0, g, c) => (g, c) }
+    val Seq((grams, c12), (unigrams, _)) = corpusCounts(seqs,
+      "graft_bigram_counts(tokens)", "graft_unigram_counts(tokens)")
+    val v = unigrams.length.toLong
     val c1 = new Array[Long](4096)
-    for ((g, c) <- model) c1((g / 4096).toInt) += c
-    scoreWithDense(seqs, model,
-      (g, c12) => microNat(math.log(
-        (c1((g / 4096).toInt) + v).toDouble / (c12 + 1).toDouble) * 1000000),
-      "avg_nll")
+    for (i <- grams.indices) c1((grams(i) / 4096).toInt) += c12(i)
+    val nll = Array.tabulate(grams.length) { i =>
+      graft.functions.expressions.microNat(StrictMath.log(
+        (c1((grams(i) / 4096).toInt) + v).toDouble / (c12(i) + 1).toDouble) * 1000000)
+    }
+    scoreWithModel(seqs, grams, nll, "avg_nll")
   }
 
   /** DuckDB mirror of [[scoreBigramNll]] (seqsSql = a CTE body yielding
@@ -188,41 +206,32 @@ object LanguageModel {
     * integer folds. Self-scoring form: every scored bigram exists, so the
     * discounted term is never the only mass and P > 0 always.
     *
-    * Shape: ONE counting job collects the vocab²-bounded distinct-bigram
-    * model (alphabet-, not corpus-scaled); all four count families are
-    * ≤4096-slot driver arrays; scoring is one fused dense-table kernel
-    * projection of the corpus scan — zero corpus shuffles, zero joins. */
+    * Shape: one [[graft.functions.expressions.CodeSumAgg]] job sums the
+    * per-doc bigram histograms into the vocab²-bounded (alphabet-, not
+    * corpus-scaled) model, returned to the driver as one row of primitive
+    * arrays; all four count families are ≤4096-slot driver arrays; the
+    * per-gram nll quantizes driver-side exactly as the SQL it replaces
+    * (Long products, `StrictMath.log`, HALF_UP); scoring is one fused
+    * kernel projection of the corpus scan — zero corpus shuffles, zero
+    * joins. */
   def scoreBigramKn(seqs: DataFrame): DataFrame = {
-    // r6 final shape, mirroring [[scoreBigramNll]]: ONE counting job
-    // collects the vocab²-bounded distinct-bigram model; all four KN
-    // count families (c1/n1w by t1, ncont by t2, N11) are ≤4096-slot
-    // driver arrays; the per-gram nll quantizes driver-side with the
-    // SAME Long-wrap multiply order and HALF_UP rounding as the former
-    // SQL expression; scoring is the fused dense-table kernel pass —
-    // zero corpus shuffles. (The r5 corpus-window form read 8.4 s at
-    // sf0.1, the r6-intermediate checkpoint + broadcast-join form
-    // 2.8 s; this measures ~1.7 s, bitwise identical.)
-    graft.functions.expressions.register(seqs.sparkSession)
-    val model = docBigramCounts(seqs)
-      .groupBy(col("gram")).agg(sum(col("n_occ")).as("c12"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val Seq((grams, c12)) = corpusCounts(seqs, "graft_bigram_counts(tokens)")
     val c1 = new Array[Long](4096)
     val n1w = new Array[Long](4096)
     val ncont = new Array[Long](4096)
-    var n11 = 0L
-    for ((g, c) <- model) {
-      val t1 = (g / 4096).toInt; val t2 = (g % 4096).toInt
-      c1(t1) += c; n1w(t1) += 1; ncont(t2) += 1; n11 += 1
+    val n11 = grams.length.toLong
+    for (i <- grams.indices) {
+      val t1 = (grams(i) / 4096).toInt; val t2 = (grams(i) % 4096).toInt
+      c1(t1) += c12(i); n1w(t1) += 1; ncont(t2) += 1
     }
-    scoreWithDense(seqs, model,
-      (g, c12) => {
-        val t1 = (g / 4096).toInt; val t2 = (g % 4096).toInt
-        microNat(math.log(
-          (4 * c1(t1) * n11).toDouble /
-            (math.max(4 * c12 - 3, 0L) * n11 + 3 * n1w(t1) * ncont(t2)).toDouble)
-          * 1000000)
-      },
-      "avg_nll_kn")
+    val nll = Array.tabulate(grams.length) { i =>
+      val t1 = (grams(i) / 4096).toInt; val t2 = (grams(i) % 4096).toInt
+      graft.functions.expressions.microNat(StrictMath.log(
+        (4 * c1(t1) * n11).toDouble /
+          (math.max(4 * c12(i) - 3, 0L) * n11 + 3 * n1w(t1) * ncont(t2)).toDouble)
+        * 1000000)
+    }
+    scoreWithModel(seqs, grams, nll, "avg_nll_kn")
   }
 
   /** DuckDB mirror of [[scoreBigramKn]]. */
@@ -445,48 +454,26 @@ object LanguageModel {
     * micro-nat-quantized per DISTINCT (doc, token) row, so both folds are
     * exact int64 sums (order-free, bitwise cross-engine).
     *
-    * Shape: per-doc counts off the native histogram kernel (distinct
-    * (doc, token) rows only — no corpus aggregation exchange); the
-    * corpus token histogram is an alphabet-bounded (≤4096-row) aggregate
-    * broadcast back, and the corpus total rides in as a broadcast
-    * scalar — the corpus side never shuffles before its per-doc
-    * partial aggregation. */
+    * Shape: the corpus token histogram is one
+    * [[graft.functions.expressions.CodeSumAgg]] job (one partial per
+    * task, ≤4096 codes, one row to the driver); it rides into the
+    * per-doc kernel ([[graft.functions.expressions.UnigramDiversityKernel]])
+    * as a literal, and each doc's terms come from its own histogram in
+    * ONE narrow projection — no explode, no join, no doc-keyed
+    * aggregation. */
   def unigramDiversity(seqs: DataFrame): DataFrame = {
-    // r6 restructure: per-doc counts from the native histogram kernel
-    // (explode carries only distinct (doc, token) rows — no corpus
-    // hash-aggregate), the corpus token histogram cg is a ≤4096-row
-    // (alphabet-bounded) aggregate broadcast back, and the per-doc total
-    // n is the doc's own token count (size(tokens) = Σ c exactly) — the
-    // previous form paid TWO corpus-wide window sorts (by token and by
-    // doc) over the distinct (doc, token) table (5.9 s at sf0.1).
-    graft.functions.expressions.register(seqs.sparkSession)
-    val e = graft.functions.expressions
-    val dg = seqs.select(col("doc_id"), size(col("tokens")).cast("long").as("n"),
-        explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .select(col("doc_id"), col("n"), e.gramOf(col("gc")).as("gram"),
-        e.cntOf(col("gc")).as("c"))
-    // ≤4096 rows, materialized once for its two consumers (totals + the
-    // broadcast join) so the corpus histogram pass runs a single time
-    val cgT = dg.groupBy(col("gram")).agg(sum(col("c")).as("cg"))
-      .localCheckpoint(true)
-    val totals = cgT.agg(sum(col("cg")).as("__nn"))
-    dg.join(broadcast(cgT), Seq("gram"))
-      .crossJoin(broadcast(totals))
-      .select(col("doc_id"), col("c"), col("n"),
-        expr("""CAST(round(ln(CAST(n AS DOUBLE) / CAST(c AS DOUBLE))
-                |  * 1000000) AS BIGINT)""".stripMargin).as("h_micro"),
-        expr("""CAST(round(ln((CAST(c AS DOUBLE) * CAST(__nn AS DOUBLE))
-                |  / (CAST(n AS DOUBLE) * CAST(cg AS DOUBLE)))
-                |  * 1000000) AS BIGINT)""".stripMargin).as("kl_micro"))
-      .groupBy(col("doc_id"))
-      .agg(max(col("n")).as("n_tok"),
-        sum(col("c") * col("h_micro")).as("__h"),
-        sum(col("c") * col("kl_micro")).as("__k"))
-      .select(col("doc_id"), col("n_tok"),
-        (col("__h").cast("double") /
-          (col("n_tok") * lit(1000000L)).cast("double")).as("entropy"),
-        (col("__k").cast("double") /
-          (col("n_tok") * lit(1000000L)).cast("double")).as("kl_corpus"))
+    val Seq((grams, counts)) = corpusCounts(seqs, "graft_unigram_counts(tokens)")
+    val cg = new Array[Long](4096)
+    for (i <- grams.indices) cg(grams(i).toInt) = counts(i)
+    seqs.filter(size(col("tokens")) > 0)
+      .select(col("doc_id"),
+        call_function("graft_unigram_diversity", col("tokens"),
+          typedlit(cg), lit(counts.sum)).as("__r"))
+      .select(col("doc_id"), col("__r")(0).as("n_tok"),
+        (col("__r")(1).cast("double") /
+          (col("__r")(0) * lit(1000000L)).cast("double")).as("entropy"),
+        (col("__r")(2).cast("double") /
+          (col("__r")(0) * lit(1000000L)).cast("double")).as("kl_corpus"))
   }
 
   /** DuckDB mirror of [[unigramDiversity]]. */
@@ -978,57 +965,44 @@ object LanguageModel {
     * [[pmiTop]]'s two-term trick.)
     *
     * == Scale shape ==
-    * One (source, gram)-keyed count off the native histogram kernel is
-    * the only corpus-sized exchange; everything after runs on the
-    * |sources|×|vocab| grid (bounded by the token alphabet, NOT the
-    * corpus), with the vocab histogram and per-source totals broadcast.
-    * The count sub-plan is REFERENCED three times below (vocab histogram,
-    * per-source totals, grid join) but EXECUTED once: the three exchanges
-    * are canonically identical, so AQE stage reuse runs the corpus scan +
-    * count one time and serves the other two as ReusedQueryStage —
-    * measured by `graft.tools.ReuseProbe` (2 reused stages, exactly the
-    * two re-references). */
+    * One `groupBy(source)` of [[graft.functions.expressions.CodeSumAgg]]
+    * over the per-doc histograms is the only corpus pass: each task ships
+    * one partial table per source, and the driver receives one row of
+    * primitive arrays per source. The |sources|×|vocab| grid (bounded by
+    * the token alphabet, NOT the corpus) is then evaluated on the driver
+    * exactly as the SQL form evaluates it: the same IEEE double
+    * expressions, `StrictMath.log` (Spark's `ln`) and HALF_UP micro-nat
+    * rounding ([[graft.functions.expressions.microNat]]). Sources without
+    * tokens have no grid row and no output row. */
   def sourceDrift(seqs: DataFrame): DataFrame = {
-    graft.functions.expressions.register(seqs.sparkSession)
-    val e = graft.functions.expressions
-    val sg = seqs
-      .select(col("source"),
-        explode(expr("graft_unigram_counts(tokens)")).as("gc"))
-      .select(col("source"), e.gramOf(col("gc")).as("gram"),
-        e.cntOf(col("gc")).as("n_occ"))
-      .groupBy("source", "gram").agg(sum(col("n_occ")).as("c"))
-    val g = sg.groupBy("gram").agg(sum(col("c")).as("cg"))
-    val np = sg.groupBy("source").agg(sum(col("c")).as("np"))
-    val n = g.agg(sum(col("cg")).as("n"))
-    val mnP =
-      """CAST(round(ln((2.0 * CAST(c AS DOUBLE) * CAST(nq AS DOUBLE))
-        |  / (CAST(c AS DOUBLE) * CAST(nq AS DOUBLE)
-        |     + CAST(d AS DOUBLE) * CAST(np AS DOUBLE))) * 1000000)
-        |  AS BIGINT)""".stripMargin
-    val mnQ =
-      """CAST(round(ln((2.0 * CAST(d AS DOUBLE) * CAST(np AS DOUBLE))
-        |  / (CAST(c AS DOUBLE) * CAST(nq AS DOUBLE)
-        |     + CAST(d AS DOUBLE) * CAST(np AS DOUBLE))) * 1000000)
-        |  AS BIGINT)""".stripMargin
-    np.crossJoin(broadcast(g))
-      .join(sg, Seq("source", "gram"), "left")
-      .select(col("source"), col("np"), col("cg"),
-        coalesce(col("c"), lit(0L)).as("c"))
-      .crossJoin(broadcast(n))
-      .withColumn("d", col("cg") - col("c"))
-      .withColumn("nq", col("n") - col("np"))
-      .withColumn("tp",
-        when(col("c") > 0, col("c") * expr(mnP)).otherwise(lit(0L)))
-      .withColumn("tq",
-        when(col("d") > 0, col("d") * expr(mnQ)).otherwise(lit(0L)))
-      .groupBy(col("source"))
-      .agg(min(col("np")).as("n_tok"), min(col("nq")).as("__nq"),
-        sum(col("tp")).as("__sp"), sum(col("tq")).as("__sq"))
-      .select(col("source"), col("n_tok"),
-        when(col("__nq") > 0,
-          (col("__sp").cast("double") / col("n_tok").cast("double")
-            + col("__sq").cast("double") / col("__nq").cast("double"))
-            / lit(2000000.0)).as("jsd"))
+    val spark = seqs.sparkSession
+    import spark.implicits._
+    val perSource = sourceUnigrams(seqs).filter(_._2.exists(_ > 0))
+    val cg = new Array[Long](4096)
+    for ((_, cs, _) <- perSource; g <- cg.indices) cg(g) += cs(g)
+    val n = cg.sum
+    val vocab = cg.indices.filter(cg(_) > 0)
+    def mn(num: Double, den: Double): Long =
+      graft.functions.expressions.microNat(StrictMath.log(num / den) * 1000000)
+    val rows = perSource.map { case (source, cs, _) =>
+      val np = cs.sum
+      val nq = n - np
+      var sp = 0L
+      var sq = 0L
+      for (g <- vocab) {
+        val c = cs(g)
+        val d = cg(g) - c
+        val (cD, dD, npD, nqD) = (c.toDouble, d.toDouble, np.toDouble, nq.toDouble)
+        val mix = cD * nqD + dD * npD
+        if (c > 0) sp += c * mn(2.0 * cD * nqD, mix)
+        if (d > 0) sq += d * mn(2.0 * dD * npD, mix)
+      }
+      val jsd =
+        if (nq > 0) Some((sp.toDouble / np.toDouble + sq.toDouble / nq.toDouble) / 2000000.0)
+        else None
+      (source, np, jsd)
+    }
+    rows.toSeq.toDF("source", "n_tok", "jsd")
   }
 
   /** DuckDB mirror of [[sourceDrift]] (same grid, same micro-nat

@@ -37,11 +37,12 @@ import scala.jdk.CollectionConverters._
   * bitwise, not just corpus-verified.
   *
   * == Plan shape / scale ==
-  * Training is ONE distributed counting job: explode to unigrams, agg to
-  * `(source, gram)` sufficient statistics with map-side partials — the
-  * result is V × S rows (V ≪ corpus vocabulary, S a handful of sources),
-  * which is MODEL-sized, not corpus-sized, so the closed-form smoothing /
-  * ln step runs on the driver (the same "tiny planning metadata" role as
+  * Training is ONE distributed counting job: each task folds its docs'
+  * unigram histograms into one primitive code → count table per source
+  * ([[graft.functions.expressions.CodeSumAgg]]), so the `(source, gram)`
+  * sufficient statistics reach the driver as S rows of ≤ 4096-entry
+  * arrays (S a handful of sources) — MODEL-sized, not corpus-sized, so
+  * the closed-form smoothing / ln step runs on the driver (the same "tiny planning metadata" role as
   * [[Packing]]'s range boundaries or [[TreeEnsemble]]'s node table;
   * deriving those statistics relationally instead would re-expand the
   * corpus explode once per statistic — Catalyst reuses identical
@@ -69,42 +70,28 @@ object NaiveBayes {
         graft.functions.expressions.gramOf(col("gc")).as("gram"),
         graft.functions.expressions.cntOf(col("gc")).as("n_occ"))
 
-  /** Spark-`round(x)`-exact micro-nat quantizer (BigDecimal HALF_UP). */
-  private def microNat(x: Double): Long =
-    java.math.BigDecimal.valueOf(x * 1000000)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue
+  /** Micro-nat `ln(num / den)`: `CAST(round(ln(num / den) * 1000000) AS
+    * BIGINT)` evaluated as Spark evaluates it. */
+  private def microLn(num: Double, den: Double): Long =
+    graft.functions.expressions.microNat(StrictMath.log(num / den) * 1000000)
 
   /** One counting pass → driver-side closed form. Returns the dense
-    * `(gram, source, llk_micro)` model rows and `(source, prior_micro)`. */
+    * `(gram, source, llk_micro)` model rows and `(source, prior_micro)`.
+    * The pass is [[LanguageModel.sourceUnigrams]]; its doc counts
+    * include null-token docs, as the oracle's `count(*)` does. */
   private def fit(seqs: DataFrame): (Seq[Row], Seq[Row]) = {
-    graft.functions.expressions.register(seqs.sparkSession)
-    // ONE counting job for BOTH model tables (r6): each doc appends a
-    // marker entry at gram 4096 (just above the 12-bit token domain, so
-    // it can never collide with a real gram) with count 1 — the marker's
-    // per-source sum IS the doc count the priors need, and the former
-    // second counting job disappears
-    val DocMarker = 4096L
-    val rows = seqs.select(col("source"),
-        explode(expr(
-          s"concat(graft_unigram_counts(tokens), array(CAST(${(DocMarker << 40) | 1L} AS BIGINT)))")).as("gc"))
-      .groupBy(col("source"),
-        graft.functions.expressions.gramOf(col("gc")).as("gram"))
-      .agg(sum(graft.functions.expressions.cntOf(col("gc"))).as("c_ts"))
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
-    val cts = rows.filter(_._1._2 != DocMarker).toMap
-    val ds = rows.collect { case ((s, DocMarker), c) => s -> c }.toMap
-    val sources = ds.keySet.toSeq.sorted
-    val vocab = cts.keySet.map(_._2).toSeq.sorted
+    val perSource = LanguageModel.sourceUnigrams(seqs)
+    val sources = perSource.map(_._1).toSeq
+    val cts = perSource.map(_._2)
+    val vocab = (0 until 4096).filter(g => cts.exists(_(g) > 0))
     val v = vocab.size.toLong
-    val ns = sources.map(s =>
-      s -> cts.collect { case ((`s`, _), c) => c }.sum).toMap
-    val model = for (g <- vocab; s <- sources) yield Row(g, s, microNat(
-      math.log((cts.getOrElse((s, g), 0L) + 1).toDouble
-        / (ns(s) + v).toDouble)))
-    val dTot = ds.values.sum
-    val priors = sources.map(s => Row(s,
-      microNat(math.log(ds(s).toDouble / dTot.toDouble)),
-      microNat(math.log(1.0 / (ns(s) + v).toDouble))))
+    val ns = cts.map(_.sum)
+    val model = for (g <- vocab; s <- sources.indices) yield Row(g.toLong,
+      sources(s), microLn((cts(s)(g) + 1).toDouble, (ns(s) + v).toDouble))
+    val dTot = perSource.map(_._3).sum
+    val priors = sources.indices.map(s => Row(sources(s),
+      microLn(perSource(s)._3.toDouble, dTot.toDouble),
+      microLn(1.0, (ns(s) + v).toDouble)))
     (model, priors)
   }
 

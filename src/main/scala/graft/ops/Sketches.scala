@@ -217,40 +217,6 @@ object Sketches {
           .as("est_distinct"))
   }
 
-  /** DuckDB mirror of [[kmvSketch]] — the mirror reduces each source's
-    * DISTINCT hash set directly (exactly what the in-heap dedup computes
-    * from the raw stream); when the distinct set has fewer than k hashes
-    * the estimate falls back to the kept count, which in that regime IS
-    * the distinct count. */
-  def duckKmvSketchSql(seqsSql: String, k: Int): String =
-    s"""WITH seqs AS ($seqsSql),
-       |bi AS MATERIALIZED (
-       |  SELECT DISTINCT source,
-       |    (z[1] + 2048)::BIGINT * 4096 + (z[2] + 2048) AS gram
-       |  FROM (SELECT source, unnest(list_zip(tokens[1:-2], tokens[2:-1])) AS z
-       |        FROM seqs)),
-       |h AS (
-       |  SELECT DISTINCT source,
-       |    ('0x' || substr(md5('kmv:' || source || ':' || gram), 1, 15))::BIGINT
-       |      AS h
-       |  FROM bi),
-       |per_source AS MATERIALIZED (
-       |  SELECT source, (list(h ORDER BY h))[1:$k] AS hs
-       |  FROM h GROUP BY 1),
-       |merged AS (
-       |  SELECT '__all__' AS source,
-       |    (SELECT (list(x ORDER BY x))[1:$k]
-       |     FROM (SELECT unnest(hs) AS x FROM per_source)) AS hs),
-       |sk AS (
-       |  SELECT source, hs[$k] AS kth_min, len(hs) AS n_kept
-       |  FROM (SELECT * FROM per_source UNION ALL SELECT * FROM merged))
-       |SELECT source, kth_min,
-       |  CASE WHEN n_kept < $k OR kth_min IS NULL
-       |    THEN CAST(n_kept AS DOUBLE)
-       |    ELSE CAST(${k - 1} AS DOUBLE) * CAST($KmvRange AS DOUBLE)
-       |         / CAST(kth_min AS DOUBLE) END AS est_distinct
-       |FROM sk""".stripMargin
-
   /** Production KMV: the fused token-array form. One narrow pass —
     * [[graft.functions.expressions.KmvTokensAgg]] packs each bigram,
     * mixes it with a per-SOURCE salt through the Murmur3 64-bit finalizer
@@ -767,30 +733,27 @@ object Sketches {
     * subsampling happens downstream).
     *
     * == Scale shape ==
-    * Pair generation is a NARROW per-row pass over the token array by the
-    * native [[graft.functions.expressions.SkipGrams]] kernel (packed into
-    * one int64 per instance — the `(t+2048)`-gram convention — so the
-    * shuffle carries 8-byte keys, no structs); counting is one hash
-    * exchange with map-side partials over a key space bounded by
-    * `vocab² × window`, and top-k is `orderBy(...).limit` = distributed
-    * take-ordered, never a global sort. */
+    * Pair counting is a NARROW per-row pass: the native
+    * [[graft.functions.expressions.SkipGramCounts]] kernel emits each
+    * doc's distinct codes pre-counted (one int64 per code — the
+    * `(t+2048)`-gram convention with the distance in the low 2 bits), and
+    * [[graft.functions.expressions.CodeSumAgg]] folds them per task into
+    * one primitive code → count table, so the exchange carries one
+    * partial per task over a key space bounded by `vocab² × window`. The
+    * merged table's top-k ([[graft.functions.expressions.TopCodes]], count
+    * desc then code asc — code order IS (t1, t2, dist) order) becomes the
+    * `topK` output rows; nothing else leaves the aggregation. */
   def skipgramTop(seqs: DataFrame, window: Int, topK: Int): DataFrame = {
     graft.functions.expressions.register(seqs.sparkSession)
-    // r6: per-doc COUNTED codes off the native sort+RLE kernel — the
-    // global count aggregation and its exchange see each doc's distinct
-    // codes once (~2.4× fewer rows) instead of every instance
-    val inst = seqs.select(
-        explode(expr(s"graft_skipgram_counts(tokens, $window)")).as("gc"))
-      .select(shiftrightunsigned(col("gc"), 32).as("code"),
-        col("gc").bitwiseAND(lit(0xFFFFFFFFL)).as("n"))
-    inst.groupBy(col("code")).agg(sum(col("n")).as("c"))
+    seqs.agg(graft.functions.expressions.codeSum(
+        expr(s"graft_skipgram_counts(tokens, $window)"), 32).as("cs"))
+      .select(explode(call_function("graft_top_codes",
+        col("cs.code"), col("cs.count"), lit(topK))).as("top"))
       .select(
-        expr("CAST(code div 4 div 4096 - 2048 AS INT)").as("t1"),
-        expr("CAST(code div 4 % 4096 - 2048 AS INT)").as("t2"),
-        expr("CAST(code % 4 AS INT)").as("dist"),
-        col("c"))
-      .orderBy(col("c").desc, col("t1"), col("t2"), col("dist"))
-      .limit(topK)
+        expr("CAST(top.code div 4 div 4096 - 2048 AS INT)").as("t1"),
+        expr("CAST(top.code div 4 % 4096 - 2048 AS INT)").as("t2"),
+        expr("CAST(top.code % 4 AS INT)").as("dist"),
+        col("top.c").as("c"))
   }
 
   /** DuckDB mirror of [[skipgramTop]] (UNION ALL branch per distance). */

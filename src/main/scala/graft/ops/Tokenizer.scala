@@ -563,25 +563,21 @@ object Tokenizer {
     val tw = seqs.select(expr(s"slice(tokens, 1, $w)").as("wtoks"))
     // BOTH count families in ONE job: bigram codes ride the same explode
     // tagged by +2^25 (above the 24-bit bigram identity range, so no
-    // collision with unigram codes), the per-family top-b cut is a rank
-    // window over the two tag partitions, and the single collect returns
-    // every unigram code plus the top-b bigrams — the same rows the two
-    // separate aggregation jobs produced
+    // collision with unigram codes). One TakeOrdered puts every unigram
+    // code (≤ 4096 of them: the 12-bit token domain) ahead of the bigrams
+    // in (c desc, code asc) order, so its first 4096 + b rows hold all
+    // unigrams and the top-b bigrams — no single-partition rank window
     val tag = 1L << 25
-    val wk = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("code") >= tag)
-      .orderBy(col("c").desc, col("code").asc)
     val rows = tw.select(explode(concat(
         expr("graft_pack_ngrams(wtoks, 1)"),
         expr(s"transform(graft_pack_ngrams(wtoks, 2), c -> c + $tag)")))
         .as("code"))
       .groupBy(col("code")).agg(count(lit(1)).as("c"))
-      .withColumn("r", row_number().over(wk))
-      .filter(col("code") < tag || col("r") <= b)
-      .select(col("code"), col("c"))
+      .orderBy((col("code") < tag).desc, col("c").desc, col("code").asc)
+      .limit(4096 + b)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val u1 = rows.filter(_._1 < tag)
-    val b2 = rows.filter(_._1 >= tag).map(p => (p._1 - tag, p._2))
+    val b2 = rows.filter(_._1 >= tag).take(b).map(p => (p._1 - tag, p._2))
     val total0 = u1.map(_._2).sum + b2.map(_._2).sum
     def score(c: Long): Long =
       java.math.BigDecimal.valueOf(

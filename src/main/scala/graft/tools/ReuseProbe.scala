@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev probe: does AQE's exchange/stage reuse deduplicate the repeated
   * sub-plan references in the multi-reference diagnostics ops
-  * (`sourceDrift` re-derives the (source, gram) count three times in the
-  * LOGICAL plan; `lengthOutliers` re-reads base twice)? Prints the FINAL
+  * (`lengthOutliers` re-reads base twice)? Prints the FINAL
   * adaptive plan after execution and counts ShuffleQueryStage vs
   * ReusedQueryStage vs parquet scans — evidence for the Scaladoc claims
   * about corpus-scan multiplicity. */
@@ -19,7 +18,7 @@ object ReuseProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    for (q <- Seq("source_drift", "length_outliers", "source_overlap")) {
+    for (q <- Seq("length_outliers", "source_overlap")) {
       val df = graft.SparkEntry.queries(q)(spark, sfDir)
       df.collect()
       val p = df.queryExecution.executedPlan.toString

@@ -281,6 +281,21 @@ class FeatureEngSpec extends AnyFunSuite {
     assert(out.head.getString(2) == "sA" && out.head.getLong(4) == 0L)
   }
 
+  test("NB priors count null-token docs, as the oracle's count(*) does") {
+    graft.functions.expressions.register(spark)
+    val docs = Seq(("d1", Seq(1, 2), "sA"), ("d2", null, "sA"),
+        ("d3", Seq(3, 4), "sB"))
+      .toDF("doc_id", "tokens", "source")
+    val priors = graft.ops.NaiveBayes.priors(docs).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(priors == Map(
+      "sA" -> microNat(StrictMath.log(2.0 / 3.0) * 1000000),
+      "sB" -> microNat(StrictMath.log(1.0 / 3.0) * 1000000)))
+    // the null-token doc carries no evidence and is not scored
+    assert(graft.ops.NaiveBayes.trainAndClassify(docs).collect()
+      .map(_.getString(0)).sorted.toSeq == Seq("d1", "d3"))
+  }
+
   test("perplexity buckets: exact thirds per source, NLL-rank order") {
     graft.functions.expressions.register(spark)
     // 6 docs in one source -> 2 head, 2 middle, 2 tail by avg_nll rank;

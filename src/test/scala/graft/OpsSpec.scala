@@ -2605,6 +2605,19 @@ class OpsSpec extends AnyFunSuite {
     assert(re == codes)
   }
 
+  test("pq: an ARRAY<DOUBLE> embedding table trains and encodes like the FLOAT one") {
+    def codes(emb: org.apache.spark.sql.DataFrame) =
+      Similarity.pqCodes(emb, m = 2, dsub = 4, ksub = 2, iters = 2)
+        .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getInt(2)).toMap
+    val dbl = pqFixture.withColumn("embedding",
+      col("embedding").cast("array<double>"))
+    assert(dbl.schema("embedding").dataType ==
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
+    val got = codes(dbl)
+    assert(got.size == 40)
+    assert(got == codes(pqFixture))
+  }
+
   test("pq: trained codewords sit at the cluster subspace centroids") {
     val emb = pqFixture
     val cb = Similarity.pqTrainTable(emb, m = 2, dsub = 4, ksub = 2, iters = 2)
