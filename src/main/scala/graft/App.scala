@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 import graft.features.{FeaturesHl, Pipeline}
 import graft.sink.KeyedSink
 import graft.sources.Seqs
@@ -33,18 +30,10 @@ object App {
     val input = opts.getOrElse("input", "/root/testdata/sf0.001")
     val out = opts.getOrElse("out", "target/graft_sink")
     val level = opts.getOrElse("level", "low")
-    val cpus = opts.getOrElse("cpus", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val cpus = opts.get("cpus").map(_.toInt).getOrElse(Sessions.defaultCpus)
     val incremental = opts.contains("incremental")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     val seqs = Seqs.fromDocuments(spark, input)
     // change-list: skip up-to-date entities (version = n_tok here; a real

@@ -75,35 +75,30 @@ object Bench {
       ("features_ll" -> ((s: SparkSession, dir: String) =>
         graft.features.Pipeline.featuresLlFromDir(s, dir)))
 
+  // Cumulative stolen-CPU ticks (field 8 of /proc/stat "cpu" line): a
+  // shared VM can have multi-second near-total steal bursts, so every rep
+  // records its steal share — a contaminated rep is visible instead of
+  // silently poisoning the min (round-1's committed bench recorded 70 s
+  // for a 1.5 s query this way).
+  def stealTicks(): Long =
+    try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      try src.getLines().next().trim.split("\\s+").drop(1)
+        .lift(7).map(_.toLong).getOrElse(0L)
+      finally src.close()
+    } catch { case _: Throwable => 0L }
+  private val hz = 100.0 // USER_HZ
+  /** Share (%) of the machine's CPU time stolen over `sec` seconds. */
+  def stealPct(dTicks: Long, sec: Double): Double =
+    if (sec <= 0) 0.0
+    else 100.0 * (dTicks / hz) / (sec * Runtime.getRuntime.availableProcessors)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.defaultCpus
+    val spark = Sessions.local(cpus)
 
     val qs = allQueries
-    // Cumulative stolen-CPU ticks (field 8 of /proc/stat "cpu" line): the
-    // sandbox VM has multi-second near-total steal bursts, so every rep
-    // records its steal share — a contaminated rep is visible instead of
-    // silently poisoning the min (round-1's committed bench recorded 70 s
-    // for a 1.5 s query this way).
-    def stealTicks(): Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try src.getLines().next().trim.split("\\s+").drop(1)
-          .lift(7).map(_.toLong).getOrElse(0L)
-        finally src.close()
-      } catch { case _: Throwable => 0L }
-    val hz = 100.0 // USER_HZ
-    def stealPct(dTicks: Long, sec: Double): Double =
-      if (sec <= 0) 0.0
-      else 100.0 * (dTicks / hz) / (sec * Runtime.getRuntime.availableProcessors)
     def once(name: String): Double = {
       val t0 = System.nanoTime()
       try {

@@ -1,25 +1,51 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps `explain("formatted")` for the key plans into EXPLAIN.md — the
   * plan-shape review artifact (shuffle count, broadcast choices, pushdown,
-  * codegen spans). Run: `sbt "runMain graft.Explain"`. */
+  * codegen spans). With trailing query names (any [[Bench.allQueries]]
+  * entry), writes each named query's plan to `<out>/<query>.txt` instead —
+  * the before/after plan evidence of an optimization.
+  * Usage: `graft.Explain [sfDir] [out] [query ...]`. */
 object Explain {
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "EXPLAIN.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = args.drop(2)
+    val spark = Sessions.local(Sessions.defaultCpus)
+    if (names.nonEmpty) {
+      Files.createDirectories(Paths.get(out))
+      names.foreach { name =>
+        Files.writeString(Paths.get(out, s"$name.txt"),
+          formatted(Bench.allQueries(name)(spark, sfDir)))
+        println(s"wrote $out/$name.txt")
+      }
+    } else {
+      val sb = new StringBuilder
+      sb.append("# EXPLAIN — formatted physical plans (generated by graft.Explain)\n\n")
+      sb.append("Review criteria: shuffles only where semantically required " +
+        "(one per window/groupBy key), broadcast for small sides, filters and " +
+        "column pruning pushed to the parquet scan, per-token kernels inside " +
+        "a single projection (no explode of raw tokens).\n")
+      for ((name, df) <- keyPlans(spark, sfDir)) {
+        sb.append(s"\n## $name\n\n```\n")
+        sb.append(formatted(df))
+        sb.append("```\n")
+      }
+      Files.writeString(Paths.get(out), sb.toString)
+      println(s"wrote $out")
+    }
+    spark.stop()
+  }
 
-    val plans = Seq(
+  private def keyPlans(spark: SparkSession, sfDir: String): Seq[(String, DataFrame)] =
+    Seq(
       "features_ll (headline pipeline)" ->
         graft.features.Pipeline.featuresLlFromDir(spark, sfDir),
       "fv_full (1920-dim classification vector, fused kernel)" ->
@@ -153,20 +179,4 @@ object Explain {
         SparkEntry.queries("hybrid_rrf")(spark, sfDir),
       "matryoshka_recall (per-width broadcast-queries corpus passes, unioned)" ->
         SparkEntry.queries("matryoshka_recall")(spark, sfDir))
-
-    val sb = new StringBuilder
-    sb.append("# EXPLAIN — formatted physical plans (generated by graft.Explain)\n\n")
-    sb.append("Review criteria: shuffles only where semantically required " +
-      "(one per window/groupBy key), broadcast for small sides, filters and " +
-      "column pruning pushed to the parquet scan, per-token kernels inside " +
-      "a single projection (no explode of raw tokens).\n")
-    for ((name, df) <- plans) {
-      sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
-      sb.append("```\n")
-    }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"wrote $out")
-    spark.stop()
-  }
 }

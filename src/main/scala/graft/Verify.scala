@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,15 +9,7 @@ object Verify {
     val only = args.drop(2).toSet // optional: restrict to named queries
     // default to every core: the dump is the driver's gate and the machine
     // is otherwise idle during it
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.defaultCpus)
     new java.io.File(outDir).mkdirs()
     // Run query dumps on a small driver-side pool: each query is mostly
     // fixed cost (analysis + codegen + a short 32-thread job), so 4
@@ -27,8 +19,7 @@ object Verify {
     // the FIFO scheduler interleaves the jobs' tasks.
     val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt
     val work = new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)]()
+      (String, (SparkSession, String) => DataFrame)]()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach(work.add)

@@ -111,9 +111,6 @@ object expressions {
       es => IvfAssignKernel(es(0), es(1), es(2), es(3)), "built-in")
     reg.createOrReplaceTempFunction("graft_ngram_hashes",
       es => NgramHashes(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bigram_nll",
-      es => BigramNllScore(es(0), BigramNllSlots.get(litInt(es(1)))),
-      "built-in")
     reg.createOrReplaceTempFunction("graft_unigram_diversity",
       es => UnigramDiversityKernel(es(0), es(1), es(2)), "built-in")
     reg.createOrReplaceTempFunction("graft_top_codes",
@@ -1075,37 +1072,7 @@ object expressions {
     }
   }
 
-  /** Driver-side registry handing per-query bigram-NLL model broadcasts
-    * to [[BigramNllScore]] (the registered-function builder can only
-    * receive child EXPRESSIONS, so the broadcast travels by slot id: the
-    * caller registers the broadcast, passes the id as a literal, and the
-    * builder — which runs at analysis time ON THE DRIVER — captures the
-    * broadcast into the expression instance, whence it serializes to
-    * executors as a normal torrent-broadcast handle). The registry keeps
-    * only the last few entries; evicted broadcasts become unreachable
-    * once their query plans are GC'd and Spark's ContextCleaner reclaims
-    * them. */
-  object BigramNllSlots {
-    private val slots =
-      new java.util.concurrent.ConcurrentHashMap[Int,
-        org.apache.spark.broadcast.Broadcast[BigramNllTable]]()
-    private val nextId = new java.util.concurrent.atomic.AtomicInteger(0)
-    private val Keep = 8
-    def put(bc: org.apache.spark.broadcast.Broadcast[BigramNllTable]): Int = {
-      val id = nextId.incrementAndGet()
-      slots.put(id, bc)
-      slots.keySet.removeIf(k => k <= id - Keep)
-      id
-    }
-    def get(id: Int): org.apache.spark.broadcast.Broadcast[BigramNllTable] = {
-      val bc = slots.get(id)
-      require(bc != null, s"bigram-nll model slot $id expired")
-      bc
-    }
-  }
-
-  /** graft_bigram_nll(tokens ARRAY<INT>, slot INT) → ARRAY<BIGINT>
-    * `[n_bigrams, sum_micro]`
+  /** (tokens ARRAY<INT>) → ARRAY<BIGINT> `[n_bigrams, sum_micro]`
     *
     * Fused self-scored bigram-LM document scoring: one pass over the
     * token array accumulating `Σ nll_micro[gram]` over every bigram
@@ -1114,10 +1081,11 @@ object expressions {
     * ([[graft.ops.LanguageModel.scoreBigramKn]] / `scoreBigramNll`),
     * with zero explode, zero join and zero aggregation exchange. The
     * model is a [[BigramNllTable]] holding only the corpus's distinct
-    * bigrams, distributed as a real Spark broadcast via
-    * [[BigramNllSlots]]. PRECONDITION (self-scoring contract): every
-    * scored bigram must exist in the model — an absent one trips the
-    * require below. Returns null for rows with fewer than 2 tokens (no
+    * bigrams, distributed as a real Spark broadcast that the expression
+    * owns: it has no SQL name, and callers build its Column through
+    * `org.apache.spark.sql.graft.Columns`. PRECONDITION (self-scoring
+    * contract): every scored bigram must exist in the model — an absent
+    * one trips the require below. Returns null for rows with fewer than 2 tokens (no
     * bigrams — such docs are absent from the relational form's output
     * too). */
   case class BigramNllScore(tokens: Expression,

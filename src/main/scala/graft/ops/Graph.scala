@@ -56,7 +56,7 @@ object Graph {
     // materialize the edge list ONCE: it is referenced by the degree
     // count, the orientation join and the wedge-closing join, and Spark
     // re-executes a lazy subtree per reference (the sketch_hll diamond —
-    // PlanAudit measured 108 corpus scans here before the checkpoint,
+    // a plan audit counted 108 corpus scans here before the checkpoint,
     // 4 after). Edge/node tables are graph-sized, not corpus-sized.
     val e = edges.select(col("u"), col("v")).localCheckpoint(true)
     val deg = e.select(col("u").as("n")).union(e.select(col("v").as("n")))

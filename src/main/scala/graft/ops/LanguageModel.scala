@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Columns
 
 /** Corpus-level statistical language modeling for data curation: add-one
   * smoothed bigram cross-entropy scoring (the CCNet-style "perplexity
@@ -117,10 +118,9 @@ object LanguageModel {
     }
     val bc = seqs.sparkSession.sparkContext.broadcast(
       new e.BigramNllTable(grams, vals))
-    val slot = e.BigramNllSlots.put(bc)
+    val score = Columns.column(e.BigramNllScore(Columns.expression(col("tokens")), bc))
     seqs.filter(size(col("tokens")) >= 2)
-      .select(col("doc_id"),
-        call_function("graft_bigram_nll", col("tokens"), lit(slot)).as("__r"))
+      .select(col("doc_id"), score.as("__r"))
       .select(col("doc_id"),
         col("__r")(0).as("n_bigrams"),
         (col("__r")(1).cast("double") /

@@ -94,8 +94,8 @@ object LinearModel {
     * explode, no join, no aggregation exchange; numerically identical
     * (OpsSpec).
     *
-    * MEASURED SLOWER than [[score]] (graft.tools.LinearProbe, sf0.1
-    * local[32], min of 5: relational 1.15 s vs kernel 2.43 s): the
+    * MEASURED SLOWER than [[score]] (round 4, sf0.1 local[32], min of 5,
+    * BENCH.md: relational 1.15 s vs kernel 2.43 s): the
     * relational form's md5/explode/join/agg all run inside whole-stage
     * codegen and its doc_id exchange is tiny after map-side partials,
     * while a CodegenFallback expression interprets per row. The kernel

@@ -385,7 +385,7 @@ object Regression {
     // one materialized residual table: referenced by the calibration
     // rank, its count, and the test aggregation (12 bytes/row — eval
     // corpora are bounded; without it each reference re-runs the scan +
-    // fit, the PlanAudit diamond)
+    // fit, the sketch_hll diamond)
     val pred = rows.crossJoin(broadcast(model.select("b0", "b1", "b2")))
       .selectExpr("doc_id", "bucket", s"$ResidExpr AS resid")
       .localCheckpoint(true)

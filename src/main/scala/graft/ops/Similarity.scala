@@ -2025,7 +2025,7 @@ object Similarity {
         .as("sq"))
       // candidate-sized (ids + one BIGINT): materialized once — the two
       // denominator windows and the final projection would otherwise each
-      // re-execute the whole plant->band->verify chain (PlanAudit: 64
+      // re-execute the whole plant->band->verify chain (plan audit: 64
       // corpus scans -> ~20)
       .localCheckpoint(true)
     def denomOver(side: String, other: String) = {
@@ -2215,7 +2215,7 @@ object Similarity {
     // consumers (n_cand + the ADC ranking) re-run only a narrow fused
     // cell-assignment projection + broadcast join since the
     // IvfAssignKernel rewrite, which is cheaper than the materialization
-    // barrier the checkpoint paid (PlanAudit r5 added it when the chain
+    // barrier the checkpoint paid (a round-5 plan audit added it when the chain
     // was a crossJoin + window per reference)
     val nCand = cand.groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_cand"))

@@ -102,7 +102,7 @@ object Sketches {
     * partition — never the distinct set itself. Exact count and sketch
     * come out of the SAME `groupBy(source)` pass (one heavy reduce over
     * the distinct set — an earlier form aggregated `bi` three times and
-    * tripled the reduce-side cost, measured by `tools.KmvProbe`), and the
+    * tripled the reduce-side cost, measured in round 4 — BENCH.md), and the
     * global row is built by merging the 20-row per-source PARTIALS
     * (`sum` of counts + k-min over the unioned k-min lists, ≤ sources × k
     * elements), not by rescanning the corpus — the associative merge that

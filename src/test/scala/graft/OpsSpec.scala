@@ -2487,6 +2487,18 @@ class OpsSpec extends AnyFunSuite {
     assert(math.abs(out("d2")._2 - d2) < 1e-5)
   }
 
+  test("a bigram-nll scoring keeps its model through 20 newer scorings, as built and re-analyzed") {
+    val seqs = Seq(("d1", Seq(1, 2, 1, 2)), ("d2", Seq(1, 3)), ("d3", Seq(3, 3, 1)))
+      .toDF("doc_id", "tokens")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("doc_id").collect().toSeq
+    val scored = graft.ops.LanguageModel.scoreBigramKn(seqs)
+    val expected = rows(scored)
+    for (i <- 1 to 20)
+      graft.ops.LanguageModel.scoreBigramKn(seqs.filter(size(col("tokens")) > i % 3))
+    assert(rows(scored) == expected)
+    assert(rows(org.apache.spark.sql.graft.Reanalyzed(scored)) == expected)
+  }
+
   test("zipf fit: per-source power-law slope and fit quality") {
     // source zA: token i repeated 32/i times (Zipf, slope ~ -1);
     // zB: uniform counts (slope ~ 0 on the log-log line)

@@ -5,17 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** One SparkSession for the whole forked test JVM. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // catalog tables (bucketed-join tests) land in a temp dir, not ./spark-warehouse
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    // catalog tables (bucketed-join tests) land in a temp dir, not ./spark-warehouse
+    val s = Sessions.local(4, "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     graft.functions.expressions.register(s)
     s
   }
