@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,8 +11,10 @@ import org.apache.spark.sql.functions._
   * current row — **zero temporal leakage** by construction.
   *
   * == Scale design ==
-  * Every helper here shuffles at most once, on the entity key (Spark's
-  * `Window.partitionBy` requires co-located, sorted partitions — one exchange
+  * [[trailingMedian]] and [[refractoryExpr]] are per-row array folds over a
+  * bounded series: no shuffle. Every Window helper here shuffles at most
+  * once, on the entity key (Spark's `Window.partitionBy` requires
+  * co-located, sorted partitions — one exchange
   * + sort that AQE can also reuse across multiple window functions with the
   * same spec; we deliberately keep ONE canonical spec `(key, ts)` so Catalyst
   * collapses all of them into a single Window operator). Per-entity state is
@@ -41,27 +43,17 @@ object Windows {
   def lagSelf(value: Column, key: String, ts: String): Column =
     coalesce(lag(value, 1).over(byKey(key, ts)), value)
 
-  /** Trailing rolling median over the last `span` rows (inclusive) — onset
-    * threshold baseline (`OnsetDetector.cpp:551-570`). Exact: sorts the
-    * bounded trailing buffer. */
-  def rollingMedian(value: Column, span: Int, key: String, ts: String): Column = {
-    val buf = collect_list(value)
-      .over(byKey(key, ts).rowsBetween(-(span - 1), Window.currentRow))
-    // lower-middle element, matching Stats median semantics
-    element_at(array_sort(buf), ((size(buf) - 1) / 2).cast("int") + 1)
-  }
-
-  /** Gap-based sessionization (gaps-and-islands): new session when the gap
-    * from the previous event exceeds `gap`. Works on any numeric/timestamp
-    * ts (caller passes `ts` already cast to a subtractable type). Returns the
-    * 0-based session index per key. Analog of the min-gap / session grouping
-    * (`OnsetDetector.cpp:288-290`; `session_window` is the streaming analog).
-    */
-  def sessionId(tsNum: Column, gap: Column, key: String, ts: String): Column = {
-    val prev = lag(tsNum, 1).over(byKey(key, ts))
-    val isNew = when(prev.isNull || tsNum - prev > gap, 1).otherwise(0)
-    sum(isNew).over(running(key, ts)) - 1
-  }
+  /** Trailing median of an array, per row: element `i` of the result is the
+    * lower-middle element (index `(len - 1) div 2`, matching Stats median
+    * semantics) of the sorted slice `xs[max(0, i - span + 1) .. i]` — the
+    * onset threshold baseline (`OnsetDetector.cpp:551-570`). A SQL
+    * expression string over the array column `xs`; the slice holds at most
+    * `span` elements, so this is a narrow per-row fold, with no shuffle and
+    * no Window. */
+  def trailingMedian(xs: String, span: Int): String =
+    s"""transform($xs, (x, i) ->
+       |  element_at(sort_array(slice($xs, greatest(1, i + 2 - $span), least(i + 1, $span))),
+       |    CAST((least(i + 1, $span) - 1) div 2 AS INT) + 1))""".stripMargin
 
   /** Refractory-gap suppression over an ordered array of event positions:
     * keep an event iff it is ≥ `gap` after the last KEPT event (iterative —

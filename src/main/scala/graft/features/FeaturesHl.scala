@@ -85,16 +85,7 @@ object FeaturesHl {
       .withColumn("__rser", expr(
         s"transform(graft_frame_features(tokens, ${graft.sources.Seqs.RFrameSize}, " +
           s"${graft.sources.Seqs.RHop}, ${graft.sources.Seqs.SilenceThreshold}), fr -> fr.rms)"))
-      .withColumn("__ov", {
-        val w = graft.queries.TokenQueries.MedianSpan - 1
-        expr(
-          s"""transform(sequence(0, size(__rser) - 1), i ->
-             |  greatest(element_at(__rser, i + 1) -
-             |    element_at(sort_array(slice(__rser, greatest(i - $w, 0) + 1,
-             |        i - greatest(i - $w, 0) + 1)),
-             |      CAST((i - greatest(i - $w, 0)) div 2 AS INT) + 1),
-             |    CAST(0.0 AS DOUBLE)) / ${graft.queries.RhythmQueries.OnsetScale})""".stripMargin)
-      })
+      .withColumn("__ov", expr(graft.queries.RhythmQueries.onsetSeries("__rser")))
       .withColumn("n_onsets", expr(
         """CAST(size(filter(sequence(0, size(__ov) - 1), i ->
           |  element_at(__ov, i + 1) > 0.1 AND

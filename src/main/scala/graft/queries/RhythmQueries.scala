@@ -27,6 +27,13 @@ object RhythmQueries {
   val OnsetScale = 650.0
   private val MedianSpan = TokenQueries.MedianSpan
 
+  /** Onset-value series of a rhythm-clock rms array column, as a SQL
+    * expression: each value's excess over its trailing median, floored at 0
+    * and divided by [[OnsetScale]] (`OnsetDetector.cpp:551-570`). */
+  def onsetSeries(xs: String): String =
+    s"""zip_with($xs, ${Windows.trailingMedian(xs, MedianSpan)},
+       |  (x, b) -> greatest(x - b, CAST(0.0 AS DOUBLE)) / $OnsetScale)""".stripMargin
+
   /** Confident-pitch params: token analogs of `IsConfidentPitch`
     * (`SampleAnalyser.cpp:1236-1292`) — the frame "pitch" is its RMS, its
     * confidence is peak/2048. */
@@ -211,15 +218,10 @@ object RhythmQueries {
 
     // canny-sharpened onset peak metrics (RhythmTracker.cpp:356-480, 623-659)
     "rhythm_metrics" -> ((s, dir) => {
-      val fr = Framing.frameRows(seqs(s, dir), RF, RH)
-      val ov = fr
-        .withColumn("base",
-          Windows.rollingMedian(col("rms"), MedianSpan, "doc_id", "frame_id"))
-        .withColumn("v", expr(
-          s"greatest(rms - base, CAST(0.0 AS DOUBLE)) / $OnsetScale"))
-      ov.groupBy(col("doc_id"))
-        .agg(expr("sort_array(collect_list(struct(frame_id, v)))").as("ps"))
-        .withColumn("ser", expr("transform(ps, p -> p.v)"))
+      Framing.withFrames(seqs(s, dir), RF, RH)
+        .filter(col("frames").isNotNull)
+        .withColumn("xs", expr("transform(frames, fr -> fr.rms)"))
+        .withColumn("ser", expr(onsetSeries("xs")))
         .withColumn("m", expr("graft_rhythm_metrics(graft_canny(ser))"))
         .select(col("doc_id"),
           expr("IF(m.strength = 0.0, 0.0, m.strength)").as("strength"),
@@ -331,17 +333,10 @@ object RhythmQueries {
     // Loop. One narrow per-row pipeline, zero shuffle (sqrt is IEEE-exact
     // so no rounding needed; strength/flux proven bitwise elsewhere).
     "hl_loop" -> ((s, dir) => {
-      val span = MedianSpan
       seqs(s, dir)
         .withColumn("rfr", Framing.framesExpr(RF, RH, Seqs.SilenceThreshold))
         .withColumn("rrms", expr("transform(rfr, fr -> fr.rms)"))
-        .withColumn("rv", expr(
-          s"""transform(sequence(0, size(rfr) - 1), i ->
-             |  greatest(element_at(rrms, i + 1) -
-             |    element_at(sort_array(slice(rrms,
-             |        greatest(1, i + 2 - $span), least(i + 1, $span))),
-             |      CAST((least(i + 1, $span) - 1) div 2 AS INT) + 1),
-             |    CAST(0.0 AS DOUBLE)) / $OnsetScale)""".stripMargin))
+        .withColumn("rv", expr(onsetSeries("rrms")))
         .withColumn("n_onsets", expr(
           """size(filter(sequence(0, size(rv) - 1), i ->
             |  element_at(rv, i + 1) > 0.1
@@ -372,22 +367,17 @@ object RhythmQueries {
     // tempo summary: range reject + octave fold into [80, 200) + 3-beat
     // duration gate (RhythmTracker.cpp:203-218, 256-281)
     "tempo_summary" -> ((s, dir) => {
-      val fr = Framing.frameRows(seqs(s, dir), RF, RH)
-      val ov = fr
-        .withColumn("base",
-          Windows.rollingMedian(col("rms"), MedianSpan, "doc_id", "frame_id"))
-        .withColumn("v", expr(
-          s"greatest(rms - base, CAST(0.0 AS DOUBLE)) / $OnsetScale"))
-        .withColumn("prev_v", lag(col("v"), 1).over(
-          Window.partitionBy(col("doc_id")).orderBy(col("frame_id"))))
-        .withColumn("is_onset", col("v") > 0.1 &&
-          (col("prev_v").isNull || col("prev_v") <= 0.1))
-      val perDoc = ov.groupBy(col("doc_id")).agg(
-        sum(when(col("is_onset"), 1).otherwise(0)).cast("int").as("n_onsets"),
-        coalesce(max(when(col("v") >= rhythm.PeakThreshold, col("frame_id"))),
-          lit(0)).as("last_active"),
-        any_value(col("n_tok")).as("n_tok"))
-      perDoc
+      Framing.withFrames(seqs(s, dir), RF, RH)
+        .filter(col("frames").isNotNull)
+        .withColumn("xs", expr("transform(frames, fr -> fr.rms)"))
+        .withColumn("v", expr(onsetSeries("xs")))
+        .withColumn("n_onsets", expr(
+          """size(filter(sequence(0, size(v) - 1), i ->
+            |  element_at(v, i + 1) > 0.1
+            |  AND (i = 0 OR element_at(v, i) <= 0.1)))""".stripMargin))
+        .withColumn("last_active", expr(
+          s"""coalesce(array_max(filter(sequence(0, size(v) - 1), i ->
+             |  element_at(v, i + 1) >= CAST(${rhythm.PeakThreshold} AS DOUBLE))), 0)""".stripMargin))
         // onsets per minute on the 1024-token/sec clock
         .withColumn("tempo_raw", expr(
           "CAST(n_onsets AS DOUBLE) * 61440.0 / n_tok"))

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Framing, Windows}
@@ -121,9 +120,12 @@ object TokenQueries {
 
     // trailing rolling median (OnsetDetector.cpp:551-570)
     "rolling_median" -> ((s, dir) => {
-      Framing.frameRows(seqs(s, dir))
-        .withColumn("med", Windows.rollingMedian(col("rms"), MedianSpan, "doc_id", "frame_id"))
-        .select(col("doc_id"), col("frame_id"), col("rms"), col("med"))
+      Framing.withFrames(seqs(s, dir))
+        .withColumn("xs", expr("transform(frames, fr -> fr.rms)"))
+        .withColumn("med", expr(Windows.trailingMedian("xs", MedianSpan)))
+        .select(col("doc_id"),
+          posexplode(arrays_zip(col("xs"), col("med"))).as(Seq("frame_id", "z")))
+        .select(col("doc_id"), col("frame_id"), col("z.xs").as("rms"), col("z.med"))
     }),
 
     // forward-fill gated on audibility (SampleAnalyser.cpp:875-917)
@@ -198,20 +200,16 @@ object TokenQueries {
     // onset pipeline: trailing-median baseline → rising edge → refractory →
     // sessionization (OnsetDetector.cpp:551-587, RhythmTracker.cpp:99-134)
     "onsets" -> ((s, dir) => {
-      val fr = Framing.frameRows(seqs(s, dir), Seqs.RFrameSize, Seqs.RHop)
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("frame_id"))
-      val odf = fr
-        .withColumn("base", Windows.rollingMedian(col("rms"), MedianSpan, "doc_id", "frame_id"))
-        .withColumn("post", col("rms") - col("base"))
-        .withColumn("prev_post", lag(col("post"), 1).over(w))
-        .withColumn("is_onset",
-          col("post") > OnsetThreshold &&
-            (col("prev_post").isNull || col("prev_post") <= OnsetThreshold))
-      val perDoc = odf.groupBy(col("doc_id")).agg(
-        sum(when(col("is_onset"), 1).otherwise(0)).cast("int").as("n_raw"),
-        sort_array(collect_list(when(col("is_onset"), col("frame_id"))))
-          .as("onset_frames"))
-      perDoc
+      Framing.withFrames(seqs(s, dir), Seqs.RFrameSize, Seqs.RHop)
+        .filter(col("frames").isNotNull)
+        .withColumn("xs", expr("transform(frames, fr -> fr.rms)"))
+        .withColumn("post", expr(
+          s"zip_with(xs, ${Windows.trailingMedian("xs", MedianSpan)}, (x, b) -> x - b)"))
+        .withColumn("onset_frames", expr(
+          s"""filter(sequence(0, size(post) - 1), i ->
+             |  element_at(post, i + 1) > CAST($OnsetThreshold AS DOUBLE)
+             |  AND (i = 0 OR element_at(post, i) <= CAST($OnsetThreshold AS DOUBLE)))""".stripMargin))
+        .withColumn("n_raw", size(col("onset_frames")))
         .withColumn("kept", Windows.refractoryExpr("onset_frames", RefractoryGap))
         .withColumn("n_kept", size(col("kept")).cast("int"))
         .withColumn("first_onset",

@@ -16,9 +16,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamOps {
 
-  /** Gap-based sessionization with `session_window` — the streaming
-    * equivalent of the batch gaps-and-islands sessionizer
-    * ([[graft.core.Windows.sessionId]]); same gap semantics. */
+  /** Gap-based sessionization with `session_window`: a new session when
+    * the gap from the previous event exceeds `gap` (the batch form is the
+    * `events_sessionize` query); same gap semantics. */
   def sessionize(events: DataFrame, gap: String, watermark: String): DataFrame =
     events
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -149,12 +149,12 @@ object StreamOps {
   final case class MedOut(doc_id: String, frame_id: Int, med: Double)
 
   /** Streaming trailing rolling median over the last `span` frames — the
-    * custom-state form of the batch kernel [[graft.core.Windows.rollingMedian]]
-    * (onset threshold baseline, `OnsetDetector.cpp:551-570`). State per key
-    * is the last `span − 1` values (bounded — O(span) per key at any stream
-    * scale) plus the last emitted frame id; each new frame emits the
-    * lower-middle element of the sorted trailing buffer, exactly matching
-    * the batch `rowsBetween(−(span−1), current)` + array_sort semantics.
+    * custom-state form of the batch array fold
+    * [[graft.core.Windows.trailingMedian]] (onset threshold baseline,
+    * `OnsetDetector.cpp:551-570`). State per key is the last `span − 1`
+    * values (bounded — O(span) per key at any stream scale) plus the last
+    * emitted frame id; each new frame emits the lower-middle element of the
+    * sorted trailing buffer, exactly matching the batch fold.
     *
     * Same ordering contract and watermark-timeout state expiry as
     * [[envelopeStream]] (the positional window needs each key's frames

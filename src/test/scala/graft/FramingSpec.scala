@@ -52,4 +52,17 @@ class FramingSpec extends AnyFunSuite {
   test("rhythm clock (512/128): n=1024 -> (1024-512)/128+1 = 5 frames") {
     assert(frames(Seq.fill(1024)(1), 512, 128).length == 5)
   }
+
+  test("frame-series queries: a doc without tokens has no frames and no row") {
+    // token generation returns null for a null doc_id
+    val dir = java.nio.file.Files.createTempDirectory("graft-frames").toString
+    Seq((Some(1L), 500, "sA"), (None, 500, "sA")).toDF("doc_id", "n_chars", "source")
+      .write.parquet(s"$dir/documents.parquet")
+    for (q <- Seq("onsets", "rhythm_metrics", "tempo_summary", "rolling_median")) {
+      val ids = Bench.allQueries(q)(spark, dir).collect().map(_.getAs[String]("doc_id"))
+      assert(ids.toSet == Set("d000001"), q)
+      if (q == "rolling_median")
+        assert(ids.length == Framing.frameRows(Seqs.fromDocuments(spark, dir)).count())
+    }
+  }
 }

@@ -18,10 +18,10 @@ class PlanShapeSpec extends AnyFunSuite {
   private val expected = Seq(
     "features_ll" -> Shape(1, 0, 1, 0, 0, 0),
     "fv_full" -> Shape(1, 1, 1, 0, 0, 0),
-    "onsets" -> Shape(1, 1, 2, 0, 0, 2),
-    "rolling_median" -> Shape(1, 1, 2, 0, 0, 1),
-    "rhythm_metrics" -> Shape(1, 1, 2, 0, 0, 1),
-    "tempo_summary" -> Shape(1, 1, 2, 0, 0, 2),
+    "onsets" -> Shape(1, 0, 1, 0, 0, 0),
+    "rolling_median" -> Shape(1, 1, 1, 0, 0, 0),
+    "rhythm_metrics" -> Shape(1, 0, 1, 0, 0, 0),
+    "tempo_summary" -> Shape(1, 0, 1, 0, 0, 0),
     "pit_asof" -> Shape(2, 2, 3, 0, 0, 1),
     "skipgram_top" -> Shape(1, 1, 2, 0, 0, 0),
     "kn_bigram_nll" -> Shape(1, 0, 1, 0, 0, 0),

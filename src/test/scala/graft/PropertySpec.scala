@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.expr
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
@@ -7,7 +8,8 @@ import graft.functions.Stats
 
 /** Randomized property tests (FIXTURES.md §3.4): temporal-leakage and
   * stats-kernel invariants over generated inputs (seeded — deterministic).
-  * Pure-Scala oracle level; Spark-side bitwise agreement with the oracle is
+  * Pure-Scala oracle level, except the trailing-median case, which runs its
+  * SQL fold in Spark; Spark-side bitwise agreement with the other oracles is
   * covered by StatsSpec/PipelineSpec. */
 class PropertySpec extends AnyFunSuite {
 
@@ -105,6 +107,39 @@ class PropertySpec extends AnyFunSuite {
         case _ =>
       }
       if (sorted.nonEmpty) assert(kept.head == sorted.head)
+    }
+  }
+
+  test("trailing median fold == sorted trailing slice, and never reads ahead") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val rnd = new Random(551)
+    def bits(v: Seq[Any]): Seq[Long] = v.map {
+      case d: java.lang.Double => java.lang.Double.doubleToLongBits(d)
+      case x => fail(s"not a double: $x")
+    }
+    for (span <- 1 to 7) {
+      // rms-like values: non-negative, with duplicates and NaN (an
+      // empty-token frame); k is a random prefix length
+      val rows = Seq.fill(30) {
+        val xs = Seq.fill(1 + rnd.nextInt(60))(
+          if (rnd.nextInt(10) == 0) Double.NaN else rnd.nextInt(12) * 0.5)
+        (xs, 1 + rnd.nextInt(xs.length))
+      }
+      val out = rows.toDF("xs", "k")
+        .withColumn("pre", expr("slice(xs, 1, k)"))
+        .select(expr(graft.core.Windows.trailingMedian("xs", span)),
+          expr(graft.core.Windows.trailingMedian("pre", span)))
+        .collect()
+      for (((xs, k), r) <- rows.zip(out)) {
+        val ref = xs.indices.map { i =>
+          val w = xs.slice(math.max(0, i - span + 1), i + 1).toArray
+          java.util.Arrays.sort(w)
+          java.lang.Double.doubleToLongBits(w((w.length - 1) / 2))
+        }
+        assert(bits(r.getSeq[Any](0)) == ref, s"span=$span xs=$xs")
+        assert(bits(r.getSeq[Any](1)) == ref.take(k), s"span=$span k=$k xs=$xs")
+      }
     }
   }
 

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.StreamOps
 
@@ -143,14 +143,10 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val span = 5
     val rms = Seq(10.0, 4.0, 7.0, 1.0, 9.0, 2.0, 8.0, 4.0, 4.0, 6.5)
-    // batch reference: the actual Windows.rollingMedian kernel
-    val batch = rms.zipWithIndex
-      .map { case (v, i) => ("d1", i, v) }
-      .toDF("doc_id", "frame_id", "rms")
-      .withColumn("med",
-        graft.core.Windows.rollingMedian(col("rms"), span, "doc_id", "frame_id"))
-      .orderBy("frame_id")
-      .collect().map(_.getAs[Double]("med")).toSeq
+    // batch reference: the Windows.trailingMedian fold over the series array
+    val batch = Seq(rms).toDF("rms")
+      .select(expr(graft.core.Windows.trailingMedian("rms", span)))
+      .head().getSeq[Double](0)
     val mem = MemoryStream[StreamOps.FrameIn]
     def f(i: Int) = StreamOps.FrameIn("d1", i, rms(i),
       new Timestamp(1700000000000L + i * 1000L))
